@@ -46,30 +46,13 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from supplier_performance_data_pipeline_spark.sources.readers import spread_scan
+
 K_DEFAULT = 4
 ITERS_DEFAULT = 2
 DIM_DEFAULT = 64
 
 
-def spread_for_fanout(df: DataFrame, *keys: str) -> DataFrame:
-    """Hash-repartition a NARROW input to full parallelism BEFORE a
-    multiplicative explode (dim^2 grids, shingle fan-outs).
-
-    A small table is one row group -> ONE scan task, so without this the
-    entire exploded workload (millions of tuples plus their per-tuple
-    DECIMAL casts) runs single-threaded — measured 24s -> ~2s on the
-    dim-correlation grid at sf0.1. Delegates to readers.spread_scan,
-    which no-ops when the input is already at least cluster-wide: an
-    unconditional repartition here would COALESCE a thousands-of-splits
-    100 TB scan down to core count — the exact one-task hazard this
-    helper exists to prevent, inverted. Downstream aggs are order-free
-    so placement never changes results.
-    """
-    from supplier_performance_data_pipeline_spark.sources.readers import (
-        spread_scan,
-    )
-
-    return spread_scan(df, *keys)
 # Row distance (≤ dim × O(1) squares) cast to DECIMAL(24,12) before the
 # cross-row inertia sum; per-dim components round to DECIMAL(20,10)
 # before the centroid sums.
@@ -176,9 +159,9 @@ def _decoded_base(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     argmin projection (interpreted higher-order functions) and every
     DECIMAL(20,10) centroid sum (BigDecimal-backed above 18 digits)
     runs single-threaded — measured ~0.3 s per stage at sf0.1.
-    ``spread_for_fanout`` is a no-op on a scan that is already at
+    ``spread_scan`` is a no-op on a scan that is already at
     least cluster-wide, so at 100 TB this adds nothing."""
-    spread = spread_for_fanout(
+    spread = spread_scan(
         emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_e")),
         "vec_id",
     )
@@ -1378,7 +1361,7 @@ def pca_top_component(
     DECIMAL-exact sufficient statistics: per-dim sums from a DIM-tuple
     explode, S_xy from the UPPER-TRIANGLE explode only (mirrored by
     symmetry — commutative double products make the mirror
-    bit-identical to the full grid), all after spread_for_fanout so a
+    bit-identical to the full grid), all after spread_scan so a
     one-row-group scan can't serialize the fan-out; scaling by 1/n^2 is
     dropped because
     eigenvectors are scale-invariant (the eigenvalue column reports
@@ -1398,7 +1381,7 @@ def pca_top_component(
     driver never sees data. At 100 TB: identical, with the sufficient
     statistics computed over the deterministic hash sample like any
     covariance estimate."""
-    spread = spread_for_fanout(emb, id_col)
+    spread = spread_scan(emb, id_col)
     dec = "decimal(24,12)"
     # Per-dim sums once (the per-(i,j)-group sx/sy and count are the
     # same order-free DECIMAL addend sets for every pair a dim appears

@@ -35,6 +35,21 @@ time explodes before any task runs. We eager-``localCheckpoint`` each
 round's edges (16 bytes/edge, executor memory+disk); on a real cluster
 prefer reliable ``checkpoint`` to HDFS/S3 so rounds survive executor
 loss.
+
+Node-sized join sides are always broadcast. PageRank's degree, rank
+and inbound tables, BFS's distance table, triangle counting's degree
+table, label propagation's label table and HITS's score tables are
+all joined onto the edge scan with ``F.broadcast``, so the only
+data-scale exchange per round is the node-keyed aggregation. Leaving
+the strategy to the planner (AQE) gave identical results but was
+slower on a 2k-vertex/6k-edge graph (4 cores, min of 7 alternating
+pairs): PageRank 1.51 vs 1.74 s, HITS 2.01 vs 2.45 s, BFS 0.88 vs
+0.93 s, label propagation 1.02 vs 1.27 s. Scale limit: a forced
+broadcast overrides Spark's size gate, so these operators serve
+graphs whose node table fits in the driver and in every executor (the
+registered graphs' nodes are suppliers, customers and embedding
+vectors); a billion-node graph would need the broadcasts replaced by
+shuffled joins.
 """
 
 from __future__ import annotations
@@ -47,10 +62,10 @@ from pyspark.sql import functions as F
 # the fixed point on real LSH pairs and hypothesis cross-checks against
 # union-find on adversarial small graphs.
 CC_ITERS = 4
-# Hard cap for until_converged mode. O(log^2 n) rounds means 16 pairs
-# covers graphs far past any real corpus (2^(4^2) vertices); a graph
-# still moving after 16 pairs indicates a bug, and the loop raises
-# rather than silently returning unconverged components.
+# Hard cap on round pairs. O(log^2 n) rounds means 16 pairs covers
+# graphs far past any real corpus (2^(4^2) vertices); a graph still
+# moving after 16 pairs indicates a bug, and the loop raises rather
+# than silently returning unconverged components.
 CC_MAX_ITERS = 16
 
 
@@ -118,8 +133,6 @@ def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    iters: int = CC_ITERS,
-    until_converged: bool = True,
     max_iters: int = CC_MAX_ITERS,
     stats_out: dict | None = None,
 ) -> DataFrame:
@@ -138,15 +151,11 @@ def connected_components(
     (``_edge_fingerprint``); only when the digests MATCH does an exact
     one-sided ``exceptAll`` confirm set equality before exiting, so
     the contract stays exact while the steady-state probe cost drops
-    from three jobs per round to one. The check both early-exits
-    graphs that settle before ``iters`` pairs and — with
-    ``until_converged=True`` (default) — keeps iterating past ``iters``
-    up to ``max_iters`` rather than silently returning unconverged
-    components; a graph still moving at ``max_iters`` raises. Results
-    at the fixed point are independent of the round count, so the
-    oracle's fixed ``CC_ITERS``-round unroll still matches exactly.
-    ``until_converged=False`` restores the fixed ``iters``-round unroll
-    (still with early exit, which cannot change the result).
+    from three jobs per round to one. The loop exits at the fixed
+    point and never returns unconverged components: a graph still
+    moving after ``max_iters`` round pairs raises. Results at the
+    fixed point are independent of the round count, so the oracle's
+    fixed ``CC_ITERS``-round unroll still matches exactly.
 
     ``stats_out``, when given a dict, receives convergence telemetry —
     ``rounds`` (large/small-star round pairs executed, INCLUDING the
@@ -171,11 +180,10 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    rounds = max_iters if until_converged else iters
     converged = False
     executed = 0
     fp = _edge_fingerprint(edges)
-    for _ in range(rounds):
+    for _ in range(max_iters):
         # One materialization per ROUND PAIR (r13): the large-star half
         # stays lazy under the small-star's exchange-reused references.
         new_edges = _star(
@@ -190,7 +198,7 @@ def connected_components(
             converged = True
             break
         edges, fp = new_edges, new_fp
-    if until_converged and not converged:
+    if not converged:
         raise RuntimeError(
             f"connected_components did not reach a fixed point within "
             f"{max_iters} large/small-star round pairs"
@@ -215,8 +223,6 @@ def incremental_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     stats_out: dict | None = None,
-    broadcast_remap: bool = True,
-    materialize_old: bool = True,
 ) -> DataFrame:
     """(``id``, ``component``) for the whole corpus after a batch
     lands, re-converging ONLY the affected subgraph — the incremental
@@ -262,17 +268,10 @@ def incremental_components(
         F.col("id").alias("__oid"), F.col("component").alias("__oc")
     )
     # The label table feeds FOUR consumers (both endpoint contractions,
-    # the relabel pass, the root anti-join). When it arrives COMPUTED
-    # (e.g. a just-run doc_components, as in the registered replay),
-    # truncate once or the full CC recomputes per consumer. When it is
-    # a READ of the stored COMPONENT table — the production case, and
-    # corpus-sized at 100 TB — pass materialize_old=False: re-scanning
-    # a parquet table four times is cheap and pruned, while
-    # localCheckpointing it would copy the whole corpus's labels onto
-    # executor storage for no benefit (same trade as quantile_blocks'
-    # materialize knob).
-    if materialize_old:
-        old = old.localCheckpoint()
+    # the relabel pass, the root anti-join). Every caller hands it over
+    # COMPUTED (e.g. a just-run doc_components, as in the registered
+    # replay), so truncate once or the full CC recomputes per consumer.
+    old = old.localCheckpoint()
     la = old.select(F.col("__oid").alias(a_col), F.col("__oc").alias("__ca"))
     lb = old.select(F.col("__oid").alias(b_col), F.col("__oc").alias("__cb"))
     contracted = (
@@ -296,16 +295,11 @@ def incremental_components(
         stats_out["contracted_edges"] = contracted.count()
         stats_out["contracted_verts"] = sub_stats.get("verts")
     # Relabel stored rows whose root merged: one pass over the label
-    # table against the (touched root -> new root) map. The map is
-    # bounded by the batch's blast radius — broadcast by default; pass
-    # broadcast_remap=False for a pathological batch that touches a
-    # corpus-sized component set (same forced-broadcast OOM argument
-    # as _nodes_side; AQE still re-picks broadcast when it fits).
-    remap = sub.select(
-        F.col("id").alias("__oc"), F.col("component").alias("__nc")
+    # table against the (touched root -> new root) map, broadcast
+    # because it is bounded by the batch's blast radius, not the corpus.
+    remap = F.broadcast(
+        sub.select(F.col("id").alias("__oc"), F.col("component").alias("__nc"))
     )
-    if broadcast_remap:
-        remap = F.broadcast(remap)
     relabeled_old = old.join(remap, "__oc", "left").select(
         F.col("__oid").alias("id"),
         F.coalesce(F.col("__nc"), F.col("__oc")).alias("component"),
@@ -315,19 +309,6 @@ def incremental_components(
     old_roots = old.select(F.col("__oc").alias("id")).distinct()
     fresh = sub.join(old_roots, "id", "left_anti").select("id", "component")
     return relabeled_old.unionByName(fresh)
-
-
-def dedup_clusters(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    iters: int = CC_ITERS,
-) -> DataFrame:
-    """Cluster roll-up: (component, n_members) — component is the min
-    doc_id and therefore the canonical survivor; n_members - 1 documents
-    per cluster are dropped by a retention pass."""
-    cc = connected_components(pairs, a_col, b_col, iters)
-    return cc.groupBy("component").agg(F.count("*").alias("n_members"))
 
 
 # --- PageRank ---------------------------------------------------------------
@@ -343,25 +324,10 @@ PR_CONTRIB_SCALE = 12
 PR_RANK_SCALE = 9
 
 
-def _nodes_side(df: DataFrame, broadcast_nodes: bool) -> DataFrame:
-    """Node-sized join side, broadcast-forced or planner-chosen.
-
-    ``broadcast_nodes=True`` is correct and fastest while the node
-    table is dimension-sized (the co-supply graph: nodes = suppliers),
-    but a FORCED broadcast overrides Spark's own size gate — on a
-    billion-node graph it would OOM the driver building the broadcast
-    relation. Past broadcast scale, pass ``False``: the join falls back
-    to a plain equi-join and AQE picks the strategy from the observed
-    size at runtime (including re-choosing broadcast when the node
-    table turns out small after all)."""
-    return F.broadcast(df) if broadcast_nodes else df
-
-
 def pagerank(
     edges: DataFrame,
     iters: int = PR_ITERS,
     damp: float = PR_DAMP,
-    broadcast_nodes: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list (u, v) —
     (node, rank) after ``iters`` power iterations from the uniform
@@ -378,19 +344,15 @@ def pagerank(
     values, structured identically in both engines.
 
     Scale: the edge list and the per-source degree table materialize
-    once (localCheckpoint); ranks are NODE-sized, so with the default
-    ``broadcast_nodes=True`` both per-iteration joins broadcast onto
-    the edge scan — the only data-scale exchange per iteration is the
-    inbound-sum agg keyed by target. The forced broadcast is bounded by
-    the node-table size (see ``_nodes_side``): past broadcast scale set
-    ``broadcast_nodes=False`` and the joins shuffle on the vertex key
-    under AQE instead — identical results, pinned by test. Rank tables
-    localCheckpoint each round: same lineage-truncation requirement as
-    the CC rounds above (the plan otherwise re-derives every prior
-    iteration per reference)."""
+    once (localCheckpoint); ranks are NODE-sized, so both per-iteration
+    joins broadcast onto the edge scan (module docstring) — the only
+    data-scale exchange per iteration is the inbound-sum agg keyed by
+    target. Rank tables localCheckpoint each round: same
+    lineage-truncation requirement as the CC rounds above (the plan
+    otherwise re-derives every prior iteration per reference)."""
     e = edges.select("u", "v").localCheckpoint()
     deg = e.groupBy("u").agg(F.count("*").alias("deg"))
-    edeg = e.join(_nodes_side(deg, broadcast_nodes), "u").localCheckpoint()
+    edeg = e.join(F.broadcast(deg), "u").localCheckpoint()
     nodes = e.select(F.col("u").alias("s")).distinct().localCheckpoint()
     n1 = nodes.agg(F.count("*").alias("n"))
     ranks = nodes.crossJoin(F.broadcast(n1)).select(
@@ -405,9 +367,7 @@ def pagerank(
     # cut the lineage back to the scan. Identical arithmetic, pinned
     # by the unchanged oracle unroll.
     for _ in range(iters):
-        contrib = edeg.join(
-            _nodes_side(ranks, broadcast_nodes), edeg.u == ranks.s
-        ).select(
+        contrib = edeg.join(F.broadcast(ranks), edeg.u == ranks.s).select(
             "v",
             F.round(F.col("r") / F.col("deg"), PR_CONTRIB_SCALE).alias("c"),
         )
@@ -417,11 +377,7 @@ def pagerank(
             .alias("sm")
         )
         ranks = (
-            nodes.join(
-                _nodes_side(inbound, broadcast_nodes),
-                nodes.s == inbound.v,
-                "left",
-            )
+            nodes.join(F.broadcast(inbound), nodes.s == inbound.v, "left")
             .crossJoin(F.broadcast(n1))
             .select(
                 "s",
@@ -444,7 +400,6 @@ def bfs_distances(
     edges: DataFrame,
     source: int,
     rounds: int = BFS_ROUNDS,
-    broadcast_nodes: bool = True,
 ) -> DataFrame:
     """Single-source BFS over a directed edge list (u, v): (node, dist)
     for every node within ``rounds`` hops of ``source`` (the source
@@ -456,10 +411,9 @@ def bfs_distances(
     across engines (same contract as the CC star rounds; a frontier
     optimization changes cost, not results). Per round: one node-keyed
     min-agg and one join of the node-sized distance table onto the
-    edge scan — the distance table broadcasts by default, with the
-    same size bound and ``broadcast_nodes=False`` AQE fallback as
-    ``pagerank`` (see ``_nodes_side``); the only data-scale exchange
-    is the min-agg; lineage truncates per round."""
+    edge scan — the distance table broadcasts (module docstring); the
+    only data-scale exchange is the min-agg; lineage truncates per
+    round."""
     dist = (
         edges.sparkSession.createDataFrame(
             [(source, 0)], "node long, dist int"
@@ -467,7 +421,7 @@ def bfs_distances(
     )
     for _ in range(rounds):
         step = (
-            edges.join(_nodes_side(dist, broadcast_nodes), edges.u == dist.node)
+            edges.join(F.broadcast(dist), edges.u == dist.node)
             .select(
                 F.col("v").alias("node"),
                 (F.col("dist") + 1).alias("dist"),
@@ -485,9 +439,7 @@ def bfs_distances(
 # --- triangle counting ------------------------------------------------------
 
 
-def triangle_count(
-    edges: DataFrame, broadcast_nodes: bool = True
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """One row (n_nodes, n_edges, n_triangles) for an undirected simple
     graph given as CANONICAL edges (x < y, no duplicates).
 
@@ -506,11 +458,8 @@ def triangle_count(
     co-supply query thresholds edges on shared-order support for
     exactly this reason).
 
-    ``broadcast_nodes`` carries the same contract as pagerank/BFS: the
-    degree table is node-sized, so the default forced broadcast is
-    right up to broadcast scale and a driver OOM past it — pass False
-    there and the orientation joins shuffle on the vertex key under
-    AQE instead (results identical; all-integer)."""
+    The degree table is node-sized and broadcasts onto both
+    orientation joins (module docstring)."""
     ce = edges.localCheckpoint()  # reused by degrees + orientation
     deg = (
         ce.select(F.col("x").alias("kk"))
@@ -525,8 +474,8 @@ def triangle_count(
         (F.col("dxd") == F.col("dyd")) & (F.col("x") < F.col("y"))
     )
     oriented = (
-        ce.join(_nodes_side(dx, broadcast_nodes), "x")
-        .join(_nodes_side(dy, broadcast_nodes), "y")
+        ce.join(F.broadcast(dx), "x")
+        .join(F.broadcast(dy), "y")
         .select(
             F.when(first_is_src, F.col("x")).otherwise(F.col("y")).alias("u"),
             F.when(first_is_src, F.col("y")).otherwise(F.col("x")).alias("v"),
@@ -552,9 +501,7 @@ def triangle_count(
 LPA_ITERS = 3
 
 
-def label_propagation(
-    edges: DataFrame, iters: int = LPA_ITERS, broadcast_nodes: bool = True
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
     """Synchronous LABEL PROPAGATION (Raghavan et al. 2007, made
     deterministic): every node starts labeled with its own id; each
     round every node adopts the label held by the MOST of its
@@ -573,9 +520,8 @@ def label_propagation(
     is even needed.
 
     Plan at scale: per round, one equi-join of the edge table against
-    the node-sized label table (broadcast under ``broadcast_nodes`` —
-    the same dimension-vs-fact shape as pagerank's rank join; flip the
-    knob off when nodes outgrow the driver), one hash aggregation on
+    the node-sized label table (broadcast — the same dimension-vs-fact
+    shape as pagerank's rank join), one hash aggregation on
     (node, label) with map-side partials, and a node-grain window for
     the argmax. ``localCheckpoint`` truncates lineage per round —
     without it the plan doubles each iteration (the CC/pagerank
@@ -590,9 +536,7 @@ def label_propagation(
         .localCheckpoint()
     )
     for _ in range(iters):
-        side = labels.select(F.col("s").alias("u"), "lbl")
-        if broadcast_nodes:
-            side = F.broadcast(side)
+        side = F.broadcast(labels.select(F.col("s").alias("u"), "lbl"))
         cnt = (
             edges.join(side, "u")
             .groupBy("v", "lbl")
@@ -621,7 +565,6 @@ HITS_SCALE = 12
 def hits_scores(
     edges: DataFrame,
     iters: int = HITS_ITERS,
-    broadcast_nodes: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Fixed-iteration HITS (Kleinberg, JACM'99) over a directed edge
     list (u, v): hub scores on the u side, authority scores on the v
@@ -640,8 +583,7 @@ def hits_scores(
     division of two exact operands, rounded back to HITS_SCALE.
 
     Scale: hub/authority tables are node-sized and broadcast onto the
-    edge scan (``broadcast_nodes=False`` past broadcast scale — same
-    escape hatch as PageRank); the only data-scale exchanges per round
+    edge scan (module docstring); the only data-scale exchanges per round
     are the two endpoint-keyed sum aggs. Score tables localCheckpoint
     each half-step: lineage truncation, same as the PageRank rounds.
     Every hub has out-degree >= 1 and every authority in-degree >= 1
@@ -665,7 +607,7 @@ def hits_scores(
     # saved action pays back), so the per-half-step checkpoints stay.
     for _ in range(iters):
         asum = (
-            e.join(_nodes_side(h, broadcast_nodes), "u")
+            e.join(F.broadcast(h), "u")
             .groupBy("v")
             .agg(F.sum(F.col("h").cast("decimal(28,12)")).alias("sm"))
         )
@@ -682,7 +624,7 @@ def hits_scores(
             .localCheckpoint()
         )
         hsum = (
-            e.join(_nodes_side(a, broadcast_nodes), "v")
+            e.join(F.broadcast(a), "v")
             .groupBy("u")
             .agg(F.sum(F.col("a").cast("decimal(28,12)")).alias("sm"))
         )

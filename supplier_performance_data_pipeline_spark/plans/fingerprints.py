@@ -53,7 +53,7 @@ def compute_fingerprints(specs) -> dict[str, str]:
     """name -> 16-hex content fingerprint (build source + oracle)."""
     out: dict[str, str] = {}
     for name, spec in specs.items():
-        blob = _build_source(spec.build) + "\x00" + (spec.oracle or "")
+        blob = _build_source(spec.builder) + "\x00" + (spec.oracle or "")
         out[name] = hashlib.sha256(blob.encode()).hexdigest()[:16]
     return out
 

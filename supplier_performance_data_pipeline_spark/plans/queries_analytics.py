@@ -12,8 +12,6 @@ aggregates use double + ROUND(6).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,12 +24,7 @@ from supplier_performance_data_pipeline_spark.functions.money import (
 from supplier_performance_data_pipeline_spark.functions.scalar import round_doubles
 from supplier_performance_data_pipeline_spark.operators.windows import top_n_per_group
 from supplier_performance_data_pipeline_spark.plans.registry import register
-from supplier_performance_data_pipeline_spark.session import tune_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from supplier_performance_data_pipeline_spark.plans.tpch_domain import _t
 
 
 # --- A1 at fact scale: TPC-H-Q1-style pricing summary ----------------------
@@ -3255,7 +3248,6 @@ def q_orders_poisson_bootstrap_ci(
     replicate-keyed agg ({R} groups), then the CI is a {R}-row sort.
     One md5 per ORDER (not per draw) is the dominant cost and it's
     embarrassingly parallel."""
-    tune_session(spark)
     digest = F.md5(
         F.concat(F.lit(_BOOT_SALT), F.col("o_orderkey").cast("string"))
     )
@@ -3535,7 +3527,6 @@ def q_customer_revenue_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs, all broadcast. At 100 TB the customer table is the largest
     intermediate and it's already the grain the Gini/RFM family
     materializes."""
-    tune_session(spark)
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     x = (
@@ -3705,7 +3696,6 @@ def q_customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join with the broadcastable firsts table — customer-grain,
     dimension-sized relative to orders). At 100 TB the firsts table is
     the thing to bucket or broadcast per AQE; nothing else grows."""
-    tune_session(spark)
     o = _t(spark, sf_dir, "orders").select(
         "o_custkey",
         (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
@@ -3756,8 +3746,8 @@ from supplier_performance_data_pipeline_spark.operators.graph import (  # noqa: 
     connected_components,
 )
 
-# Unrolled oracle rounds: the Spark arm iterates to the exact fixed
-# point (until_converged=True); the oracle must unroll AT LEAST as many
+# Unrolled oracle rounds: the Spark arm (connected_components) always
+# iterates to the exact fixed point; the oracle must unroll AT LEAST as many
 # alternating rounds as convergence takes. 6 full iterations (12
 # half-rounds) has slack over the <=40-node per-nation blocks here —
 # extra rounds past the fixed point are no-ops in both engines.

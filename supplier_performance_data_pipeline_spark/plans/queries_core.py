@@ -39,10 +39,10 @@ from supplier_performance_data_pipeline_spark.operators.serving import (
 from supplier_performance_data_pipeline_spark.plans.registry import register
 from supplier_performance_data_pipeline_spark.plans.tpch_domain import (
     DOMAIN_CTES,
+    _t,
     domain_per_po_fused,
     domain_suppliers,
 )
-from supplier_performance_data_pipeline_spark.session import tune_session
 
 KPI_ROUNDED_SQL = """
 SELECT
@@ -104,14 +104,9 @@ risk AS (
 )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def _kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KPI table via the fused adapter (identity self-join eliminated;
     see domain_per_po_fused) — row-identical to the 3-table form."""
-    tune_session(spark)
     per_po = domain_per_po_fused(
         _t(spark, sf_dir, "supplier"),
         _t(spark, sf_dir, "nation"),
@@ -246,7 +241,6 @@ def q_orphan_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bidirectional anti-join orphan counts
     (reference: src/load_duckdb.py:107-128). Spark plans left_anti
     directly instead of outer-join + IS NULL."""
-    tune_session(spark)
     orders = _t(spark, sf_dir, "orders")
     lineitem = _t(spark, sf_dir, "lineitem")
     return orphan_counts_df(
@@ -386,7 +380,6 @@ def q_supplier_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_csv,
     )
 
-    tune_session(spark)
     sup = _t(spark, sf_dir, "supplier")
     # Keyed by applicationId: concurrent sessions (pytest-xdist, bench
     # alongside tests) each roundtrip through their own directory
@@ -443,7 +436,6 @@ def q_lineitem_range_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_parquet_range_layout,
     )
 
-    tune_session(spark)
     li = _t(spark, sf_dir, "lineitem")
     from supplier_performance_data_pipeline_spark.sources.writers import (
         sweep_stale_artifacts,
@@ -523,7 +515,6 @@ def q_order_status_priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame
     One hash agg keyed by priority, cells combined map-side; empty
     count cells coalesce to 0 (both engines agg an empty set to NULL
     for the pivoted count), empty sums stay NULL."""
-    tune_session(spark)
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     wide = (
         orders.groupBy("o_orderpriority")
@@ -618,7 +609,6 @@ def q_lineitem_zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame
         write_parquet_zorder_layout,
     )
 
-    tune_session(spark)
     li = _t(spark, sf_dir, "lineitem")
     sweep_stale_artifacts(
         tempfile.gettempdir(), "spark_graft_lineitem_zorder_layout_"
@@ -706,7 +696,6 @@ def q_supplier_on_time_eb_shrinkage(
     rate, partitioned intra-block rank — no single-partition sort even
     if the supplier dimension grows past comfort (the r7 verdict's
     borderline-watch item, retired)."""
-    tune_session(spark)
     per_po = domain_per_po_fused(
         _t(spark, sf_dir, "supplier"),
         _t(spark, sf_dir, "nation"),
@@ -784,7 +773,6 @@ def q_part_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_orc,
     )
 
-    tune_session(spark)
     part = _t(spark, sf_dir, "part")
     sweep_stale_artifacts(
         tempfile.gettempdir(), "spark_graft_part_orc_roundtrip_"
@@ -821,7 +809,6 @@ def q_customer_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_jsonl,
     )
 
-    tune_session(spark)
     cust = _t(spark, sf_dir, "customer")
     sweep_stale_artifacts(
         tempfile.gettempdir(), "spark_graft_customer_jsonl_roundtrip_"
@@ -868,7 +855,6 @@ def q_nation_fixed_width_roundtrip(
         write_fixed_width,
     )
 
-    tune_session(spark)
     nat = _t(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )

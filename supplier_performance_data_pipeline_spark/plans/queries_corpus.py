@@ -17,11 +17,9 @@ from pyspark.sql import functions as F
 from supplier_performance_data_pipeline_spark.operators.textops import tokens
 from supplier_performance_data_pipeline_spark.plans.queries_text import _TOKS_CTE
 from supplier_performance_data_pipeline_spark.plans.registry import register
-from supplier_performance_data_pipeline_spark.session import tune_session
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 

@@ -27,7 +27,6 @@ from supplier_performance_data_pipeline_spark.operators.sampling import (
 )
 from supplier_performance_data_pipeline_spark.operators.textops import TOKEN_SPLIT_RX
 from supplier_performance_data_pipeline_spark.plans.registry import register
-from supplier_performance_data_pipeline_spark.session import tune_session
 
 _TOKS = (
     "list_filter(regexp_split_to_array(lower(text), "
@@ -47,7 +46,6 @@ def _shingles_sql(n: int) -> str:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 

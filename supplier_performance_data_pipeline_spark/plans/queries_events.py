@@ -22,7 +22,6 @@ from supplier_performance_data_pipeline_spark.operators.windows import (
     sessionize,
 )
 from supplier_performance_data_pipeline_spark.plans.registry import register
-from supplier_performance_data_pipeline_spark.session import tune_session
 from supplier_performance_data_pipeline_spark.streaming.events import (
     normalize_event_ts,
 )
@@ -34,7 +33,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     read nanos as long — or as plain µs TIMESTAMP; normalize_event_ts
     exposes µs timestamps either way. The oracle SQL applies the same
     µs truncation via CAST(ts AS TIMESTAMP) so both engines agree."""
-    tune_session(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     return normalize_event_ts(raw)
@@ -518,7 +516,6 @@ def q_streaming_batch_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame
         streaming_hourly_rollup,
     )
 
-    tune_session(spark)
     app = spark.sparkContext.applicationId.replace("-", "_")
     name = f"stream_eq_{app}_{next(_STREAM_EQ_SEQ)}"
     stream = read_event_stream(spark, sf_dir)
@@ -943,7 +940,6 @@ def q_streaming_enrichment_equivalence(
         streaming_enriched_segment_rollup,
     )
 
-    tune_session(spark)
     app = spark.sparkContext.applicationId.replace("-", "_")
     name = f"stream_enrich_{app}_{next(_STREAM_EQ_SEQ)}"
     cust = _t_customer(spark, sf_dir)
@@ -985,7 +981,6 @@ def q_streaming_enrichment_equivalence(
 
 
 def _t_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
 
 
@@ -1028,7 +1023,6 @@ def q_streaming_sliding_equivalence(
         streaming_sliding_rollup,
     )
 
-    tune_session(spark)
     app = spark.sparkContext.applicationId.replace("-", "_")
     name = f"stream_slide_{app}_{next(_STREAM_EQ_SEQ)}"
     stream = read_event_stream(spark, sf_dir)
@@ -1203,7 +1197,6 @@ def q_streaming_session_equivalence(
         streaming_sessionize,
     )
 
-    tune_session(spark)
     app = spark.sparkContext.applicationId.replace("-", "_")
     name = f"stream_sess_{app}_{next(_STREAM_EQ_SEQ)}"
     stream = read_event_stream(spark, sf_dir)
@@ -1568,7 +1561,6 @@ def q_streaming_left_outer_equivalence(
         streaming_interval_join,
     )
 
-    tune_session(spark)
     app = spark.sparkContext.applicationId.replace("-", "_")
     name = f"stream_lo_{app}_{next(_STREAM_EQ_SEQ)}"
     stream = read_event_stream(spark, sf_dir)

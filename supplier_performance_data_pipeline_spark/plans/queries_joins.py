@@ -14,8 +14,6 @@ division, never on a multi-step float reduction.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,12 +23,8 @@ from supplier_performance_data_pipeline_spark.functions.money import (
     revenue_e4_sql,
 )
 from supplier_performance_data_pipeline_spark.plans.registry import register
-from supplier_performance_data_pipeline_spark.session import tune_session
+from supplier_performance_data_pipeline_spark.plans.tpch_domain import _t
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 def _spread_li(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem spread to cluster parallelism for graph-building
@@ -1532,8 +1526,8 @@ def q_supplier_hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     = one scalar division per half-step (no sqrt, no libm divergence);
     every score carries 12dp, so the oracle's unrolled CTEs match
     bit-for-bit at any iteration count. At 100 TB: edges localCheckpoint
-    once, score tables are node-sized, and the broadcast has the same
-    ``broadcast_nodes=False`` escape hatch as PageRank."""
+    once and score tables are node-sized (the broadcast's scale limit is
+    in the operators/graph.py module docstring)."""
     o = _t(spark, sf_dir, "orders")
     # r13: spread before the join + distinct fan-out (no-op at scale).
     li = _spread_li(spark, sf_dir)

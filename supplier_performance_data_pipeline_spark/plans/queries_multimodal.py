@@ -21,7 +21,6 @@ from supplier_performance_data_pipeline_spark.operators.multimodal import (
 )
 from supplier_performance_data_pipeline_spark.sources.readers import spread_scan
 from supplier_performance_data_pipeline_spark.plans.registry import register
-from supplier_performance_data_pipeline_spark.session import tune_session
 
 # ASCII byte codes of the text, 1-indexed substr — mirrors
 # _fake_features (payload[:4096]; the corpus maxes out well below that).
@@ -30,7 +29,6 @@ _CODES = "list_transform(range(1, length(text) + 1), i -> ascii(substr(text, i, 
 
 def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → media table: opaque binary payload + typed metadata."""
-    tune_session(spark)
     # r14: NO spread here — this shared builder feeds metadata-only and
     # light-Arrow consumers (features/frame_sample/byte_entropy) whose
     # Python work is cheap per row; the exchange cost outweighs the
@@ -146,7 +144,6 @@ def _audio_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav,
     )
 
-    tune_session(spark)
     # r14: no spread — WAV synth is a cheap vectorized numpy pass and the
     # payloads must stay shuffle-free end to end (plan test pins zero
     # exchanges; the exchange cost beat the parallelism at every SF).
@@ -264,7 +261,6 @@ def _image_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_rgb,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.
@@ -379,7 +375,6 @@ def _png_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_png,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.
@@ -515,7 +510,6 @@ def _png_palette_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_png_palette,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.
@@ -650,7 +644,6 @@ def _png_graya_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_png_graya,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.
@@ -778,7 +771,6 @@ def _png_16bit_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_png16,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.
@@ -897,7 +889,6 @@ def _png_adam7_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_png_adam7,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.
@@ -1014,7 +1005,6 @@ def _png_lowbit_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_png_adam7_lowbit,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.
@@ -1154,7 +1144,6 @@ def _jpeg_dc_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_jpeg_gray_dc,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.
@@ -1284,7 +1273,6 @@ def _jpeg_progressive_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_jpeg_progressive_dc,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.
@@ -1409,7 +1397,6 @@ def _jpeg_420_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_jpeg,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.
@@ -1619,7 +1606,6 @@ def _video_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_avi,
     )
 
-    tune_session(spark)
     # r13: spread the single-split local scan to cluster parallelism
     # before the Python codec work (spread_scan: a no-op on a wide
     # 100 TB scan) — encode+decode otherwise run in ONE task.

@@ -22,7 +22,6 @@ from supplier_performance_data_pipeline_spark.operators.similarity import (
     lsh_topk,
 )
 from supplier_performance_data_pipeline_spark.plans.registry import register
-from supplier_performance_data_pipeline_spark.session import tune_session
 
 DIM = 64
 TOP_K = 10
@@ -47,7 +46,6 @@ _PLANES_CTE = f"planes AS (SELECT * FROM (VALUES {_PLANES_VALUES}) t(p, hp))"
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
 
 
@@ -327,7 +325,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the three queries can never drift apart.
 REGISTRY["ann_recall_at_10"] = REGISTRY["ann_recall_at_10"].__class__(
     name="ann_recall_at_10",
-    build=REGISTRY["ann_recall_at_10"].build,
+    builder=REGISTRY["ann_recall_at_10"].builder,
     oracle=REGISTRY["ann_recall_at_10"].oracle.format(
         exact=REGISTRY["ann_cosine_topk"].oracle,
         approx=REGISTRY["ann_lsh_topk"].oracle,
@@ -361,7 +359,9 @@ from supplier_performance_data_pipeline_spark.operators.clustering import (  # n
     ITERS_DEFAULT,
     K_DEFAULT,
     kmeans_cluster_profile,
-    spread_for_fanout,
+)
+from supplier_performance_data_pipeline_spark.sources.readers import (  # noqa: E402
+    spread_scan,
 )
 
 
@@ -854,10 +854,6 @@ def q_knn_join_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_a") % KNN_RECALL_SAMPLE_MOD == 0
     )
 
-    from supplier_performance_data_pipeline_spark.sources.readers import (
-        spread_scan,
-    )
-
     # r13: spread the exact arm's candidate side — the single-split
     # local scan otherwise scores every (query, candidate) cosine in
     # ONE task (no-op on a wide 100 TB scan).
@@ -927,7 +923,7 @@ q_knn_join_recall.__doc__ = q_knn_join_recall.__doc__.format(
 # pattern as ann_recall_at_10).
 REGISTRY["knn_join_recall"] = REGISTRY["knn_join_recall"].__class__(
     name="knn_join_recall",
-    build=REGISTRY["knn_join_recall"].build,
+    builder=REGISTRY["knn_join_recall"].builder,
     oracle=REGISTRY["knn_join_recall"].oracle.format(
         single=REGISTRY["knn_join_top5"].oracle
     ),
@@ -1475,7 +1471,7 @@ q_ann_ivfpq_recall_audit.__doc__ = q_ann_ivfpq_recall_audit.__doc__.format(
 # the two queries can never drift apart (same pattern as ann_recall_at_10).
 REGISTRY["ann_ivfpq_recall_audit"] = REGISTRY["ann_ivfpq_recall_audit"].__class__(
     name="ann_ivfpq_recall_audit",
-    build=REGISTRY["ann_ivfpq_recall_audit"].build,
+    builder=REGISTRY["ann_ivfpq_recall_audit"].builder,
     oracle=REGISTRY["ann_ivfpq_recall_audit"].oracle.format(
         approx=REGISTRY["ann_ivfpq_adc_topk"].oracle
     ),
@@ -2551,7 +2547,7 @@ def q_embedding_dim_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     every k-means/PQ oracle uses), the Pearson formula is then fixed-
     order double arithmetic on those exact sums, and the top-{k} order
     is total (|r| desc, then the pair id). Plan: the narrow scan spreads
-    to full parallelism first (spread_for_fanout — a one-row-group table
+    to full parallelism first (spread_scan — a one-row-group table
     would otherwise run the whole fan-out single-threaded), per-dim
     sufficient stats come from a DIM-tuple explode (64 keys), and ONLY
     sxy rides the {pairs}-tuple upper-triangle explode — one decimal
@@ -2564,7 +2560,7 @@ def q_embedding_dim_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     d^2 blow-up multiplies the SAMPLE, never the full table —
     exactly how covariance estimation is done in practice."""
     emb = _embeddings(spark, sf_dir)
-    spread = spread_for_fanout(emb, "vec_id")
+    spread = spread_scan(emb, "vec_id")
     dec = "decimal(24,12)"
     # The per-pair group sums sx/sy/sxx/syy and the group count are the
     # SAME order-free DECIMAL sums for every pair a dimension appears in
@@ -3322,7 +3318,7 @@ def q_knn_vote_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 q_knn_vote_confusion.__doc__ = q_knn_vote_confusion.__doc__.format(k=KNN_K)
 REGISTRY["knn_vote_confusion"] = REGISTRY["knn_vote_confusion"].__class__(
     name="knn_vote_confusion",
-    build=REGISTRY["knn_vote_confusion"].build,
+    builder=REGISTRY["knn_vote_confusion"].builder,
     oracle=REGISTRY["knn_vote_confusion"].oracle.format(
         knn=REGISTRY["knn_join_top5"].oracle
     ),
@@ -3423,7 +3419,7 @@ REGISTRY["knn_graph_label_propagation"] = REGISTRY[
     "knn_graph_label_propagation"
 ].__class__(
     name="knn_graph_label_propagation",
-    build=REGISTRY["knn_graph_label_propagation"].build,
+    builder=REGISTRY["knn_graph_label_propagation"].builder,
     oracle=REGISTRY["knn_graph_label_propagation"].oracle.format(
         knn=REGISTRY["knn_join_top5"].oracle
     ),

@@ -42,7 +42,6 @@ from supplier_performance_data_pipeline_spark.operators.textops import (
     tokens,
 )
 from supplier_performance_data_pipeline_spark.plans.registry import register
-from supplier_performance_data_pipeline_spark.session import tune_session
 from supplier_performance_data_pipeline_spark.sources.readers import spread_scan
 
 # --- DuckDB dialect fragments (mirror textops/dedup exactly) ---------------
@@ -110,7 +109,6 @@ _BAND_COLS_SQL = ", ".join(
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
@@ -544,7 +542,7 @@ from supplier_performance_data_pipeline_spark.plans.registry import (  # noqa: E
 _PROFILE_ORACLE = REGISTRY["text_profile"].oracle
 REGISTRY["corpus_curation_stats"] = QuerySpec(
     name="corpus_curation_stats",
-    build=REGISTRY["corpus_curation_stats"].build,
+    builder=REGISTRY["corpus_curation_stats"].builder,
     oracle=f"""
 WITH profile AS (
 {_PROFILE_ORACLE}
@@ -966,7 +964,7 @@ def q_corpus_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 REGISTRY["corpus_full_curation"] = QuerySpec(
     name="corpus_full_curation",
-    build=REGISTRY["corpus_full_curation"].build,
+    builder=REGISTRY["corpus_full_curation"].builder,
     oracle=_FULL_CURATION_ORACLE.format(
         profile=_PROFILE_ORACLE, cc=_CC_CTES_SQL
     ),
@@ -2323,7 +2321,7 @@ def q_dedup_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 REGISTRY["dedup_detector_agreement"] = QuerySpec(
     name="dedup_detector_agreement",
-    build=REGISTRY["dedup_detector_agreement"].build,
+    builder=REGISTRY["dedup_detector_agreement"].builder,
     oracle=REGISTRY["dedup_detector_agreement"].oracle.format(
         mh=REGISTRY["lsh_near_dup_pairs"].oracle,
         sh=REGISTRY["simhash_hamming_pairs"].oracle,
@@ -2557,7 +2555,7 @@ def q_dedup_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 REGISTRY["dedup_edit_distance_verify"] = QuerySpec(
     name="dedup_edit_distance_verify",
-    build=REGISTRY["dedup_edit_distance_verify"].build,
+    builder=REGISTRY["dedup_edit_distance_verify"].builder,
     oracle=REGISTRY["dedup_edit_distance_verify"].oracle.format(
         pairs=REGISTRY["lsh_near_dup_pairs"].oracle
     ),
@@ -2991,7 +2989,7 @@ def q_hybrid_rerank_stage2(spark: SparkSession, sf_dir: str) -> DataFrame:
         REGISTRY as _REG,
     )
 
-    stage1 = _REG["hybrid_rrf_retrieval"].build(spark, sf_dir)
+    stage1 = _REG["hybrid_rrf_retrieval"].builder(spark, sf_dir)
     wr = Window.orderBy(F.desc("rrf_score"), F.asc("doc_id"))
     r1 = stage1.select(
         "doc_id", F.row_number().over(wr).cast("int").alias("rrf_rank")
@@ -3064,7 +3062,7 @@ _RERANK_REG["hybrid_rerank_stage2"] = _RERANK_REG[
     "hybrid_rerank_stage2"
 ].__class__(
     name="hybrid_rerank_stage2",
-    build=_RERANK_REG["hybrid_rerank_stage2"].build,
+    builder=_RERANK_REG["hybrid_rerank_stage2"].builder,
     oracle=_RERANK_REG["hybrid_rerank_stage2"].oracle.format(
         rrf=_RERANK_REG["hybrid_rrf_retrieval"].oracle
     ),
@@ -3139,7 +3137,7 @@ def q_hybrid_rerank_cross_encoder_seam(
         REGISTRY as _REG,
     )
 
-    stage1 = _REG["hybrid_rrf_retrieval"].build(spark, sf_dir)
+    stage1 = _REG["hybrid_rrf_retrieval"].builder(spark, sf_dir)
     wr = Window.orderBy(F.desc("rrf_score"), F.asc("doc_id"))
     r1 = stage1.select(
         "doc_id", F.row_number().over(wr).cast("int").alias("rrf_rank")
@@ -3194,7 +3192,7 @@ _RERANK_REG["hybrid_rerank_cross_encoder_seam"] = _RERANK_REG[
     "hybrid_rerank_cross_encoder_seam"
 ].__class__(
     name="hybrid_rerank_cross_encoder_seam",
-    build=_RERANK_REG["hybrid_rerank_cross_encoder_seam"].build,
+    builder=_RERANK_REG["hybrid_rerank_cross_encoder_seam"].builder,
     oracle=_RERANK_REG["hybrid_rerank_cross_encoder_seam"].oracle.format(
         rrf=_RERANK_REG["hybrid_rrf_retrieval"].oracle
     ),
@@ -3353,7 +3351,7 @@ def q_dedup_components_incremental(
 
 REGISTRY["dedup_components_incremental"] = QuerySpec(
     name="dedup_components_incremental",
-    build=REGISTRY["dedup_components_incremental"].build,
+    builder=REGISTRY["dedup_components_incremental"].builder,
     oracle=REGISTRY["dedup_components"].oracle,
 )
 
@@ -3512,7 +3510,7 @@ def q_corpus_curation_incremental(
 
 REGISTRY["corpus_curation_incremental"] = QuerySpec(
     name="corpus_curation_incremental",
-    build=REGISTRY["corpus_curation_incremental"].build,
+    builder=REGISTRY["corpus_curation_incremental"].builder,
     oracle=REGISTRY["corpus_full_curation"].oracle,
 )
 
@@ -3916,7 +3914,7 @@ REGISTRY["corpus_quality_curriculum"] = REGISTRY[
     "corpus_quality_curriculum"
 ].__class__(
     name="corpus_quality_curriculum",
-    build=REGISTRY["corpus_quality_curriculum"].build,
+    builder=REGISTRY["corpus_quality_curriculum"].builder,
     oracle=REGISTRY["corpus_quality_curriculum"].oracle.format(
         profile=REGISTRY["text_profile"].oracle, k=_CURR_STAGES
     ),

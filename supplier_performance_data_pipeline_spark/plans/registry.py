@@ -14,11 +14,15 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from supplier_performance_data_pipeline_spark.session import tune_session
+
 
 @dataclass(frozen=True)
 class QuerySpec:
     name: str
-    build: Callable[[SparkSession, str], DataFrame]
+    # The registered (spark, sf_dir) -> DataFrame function; its source
+    # is what plans/fingerprints.py hashes. Call ``build``, not this.
+    builder: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     # Columns whose cross-engine contract is *approximate* (compared at
     # tolerance by the local parity gate). Default: EVERY column is
@@ -27,6 +31,12 @@ class QuerySpec:
     # (rtol=1e-9 at 1e8 magnitude tolerates cent-level error). Declare
     # a column here only with a docstring reason.
     approx_cols: frozenset[str] = frozenset()
+
+    def build(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Tune ``spark`` once (the driver may hand over a session on
+        Spark's stock conf), then run the registered builder."""
+        tune_session(spark)
+        return self.builder(spark, sf_dir)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -42,7 +52,7 @@ def register(
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         REGISTRY[name] = QuerySpec(
             name=name,
-            build=fn,
+            builder=fn,
             oracle=oracle,
             approx_cols=frozenset(approx_cols),
         )

@@ -14,6 +14,24 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# Runtime-settable engine configs: ``get_spark`` builds sessions with
+# them and ``tune_session`` re-applies them to a session someone else
+# built (the correctness driver's).
+ENGINE_CONF = {
+    # Timestamp parity with the DuckDB oracle.
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Arrow-batched toPandas at the serving edge: a transfer-speed
+    # knob, not a semantics one — probed Arrow on vs off across
+    # dtype-diverse queries (dates, timestamps, ints, doubles,
+    # strings): identical pandas dtypes AND canonical renderings.
+    # Pinned so a caller-provided session (the correctness driver)
+    # fetches results at the same speed the engine's own sessions do.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
 
 def get_spark(
     app_name: str = "supplier-performance-spark",
@@ -27,19 +45,14 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**ENGINE_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -53,19 +66,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     still flip at runtime (timezone pinning matters for timestamp parity
     with the DuckDB oracle; AQE flags are runtime-settable too).
     """
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        # Arrow-batched toPandas at the serving edge: a transfer-speed
-        # knob, not a semantics one — probed Arrow on vs off across
-        # dtype-diverse queries (dates, timestamps, ints, doubles,
-        # strings): identical pandas dtypes AND canonical renderings.
-        # Pinned so a caller-provided session (the correctness driver)
-        # fetches results at the same speed the engine's own sessions do.
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-    }.items():
+    for k, v in ENGINE_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - conf may be static in some envs

@@ -264,39 +264,31 @@ def streaming_dedup(
     )
 
 
-REPLAY_ROWS_PER_STATE_TASK = 12_500
-# Bytes-based twin of the rows rule: ~256 KB of parquet per state task
-# (the events table packs ~20 B/row on disk, so 12.5k rows ≈ 256 KB).
+# ~256 KB of parquet per state task (the events table packs ~20 B/row
+# on disk, so about 12.5k replayed rows per task).
 REPLAY_BYTES_PER_STATE_TASK = 256_000
 
 
 def replay_state_bytes_partitions(
     n_bytes: int, bytes_per_task: int = REPLAY_BYTES_PER_STATE_TASK
 ) -> int:
-    """``replay_state_partitions`` sized from on-disk input bytes —
-    callers get the partition count from driver-side file metadata
-    (os.stat) instead of paying a count() job per replay. Same floor
-    and linear growth; see the rows variant for the state-store
-    rationale."""
-    return max(2, -(-int(n_bytes) // int(bytes_per_task)))
-
-
-def replay_state_partitions(
-    n_rows: int, rows_per_task: int = REPLAY_ROWS_PER_STATE_TASK
-) -> int:
     """Scale-adaptive shuffle/state-partition count for a bounded
-    replay: one state task per ~``rows_per_task`` replayed rows,
+    replay: one state task per ~``bytes_per_task`` of on-disk input,
     floor 2 (so multi-partition state semantics stay exercised even
-    at the smallest fixtures). Streaming state stores are created one
-    per shuffle partition at the first micro-batch and never coalesce
-    (AQE is off in stateful workloads), so a partition count sized for
-    a cluster makes a bounded replay pay that many state-store commits
-    PER micro-batch regardless of data: the r13 profile measured the
-    sf0.1 throttle replay at 12.6 s with 32 state partitions and 5.0 s
-    with 8, identical output. At a 100 TB replay the same rule yields
+    at the smallest fixtures). Callers get the byte count from
+    driver-side file metadata instead of paying a count() job per
+    replay.
+
+    Streaming state stores are created one per shuffle partition at
+    the first micro-batch and never coalesce (AQE is off in stateful
+    workloads), so a partition count sized for a cluster makes a
+    bounded replay pay that many state-store commits PER micro-batch
+    regardless of data: the r13 profile measured the sf0.1 throttle
+    replay at 12.6 s with 32 state partitions and 5.0 s with 8,
+    identical output. At a 100 TB replay the same rule yields
     thousands of state tasks — it scales with input, not with the
     local core count."""
-    return max(2, -(-int(n_rows) // int(rows_per_task)))
+    return max(2, -(-int(n_bytes) // int(bytes_per_task)))
 
 
 def run_to_memory_sink(
@@ -310,10 +302,12 @@ def run_to_memory_sink(
 
     ``shuffle_partitions`` (optional) pins the stream's state-store
     partition count for the run — set it from
-    ``replay_state_partitions(n_rows)`` so the replay's state fan-out
-    tracks its input size; the session conf is restored afterwards
-    (the count is locked into the query's own checkpoint at the first
-    micro-batch, so restoring cannot affect the running query).
+    ``replay_state_bytes_partitions(n_bytes)`` so the replay's state
+    fan-out tracks its input size; the session conf is restored right
+    after ``start()`` (the count is captured in the session clone made
+    when the query is constructed, so restoring cannot affect the
+    running query). If the restore fails, the started query is stopped
+    before the error propagates.
 
     CONCURRENCY CONTRACT (r13 ADVICE): Spark session conf is shared
     across driver threads, so the set→restore window here would leak
@@ -330,6 +324,7 @@ def run_to_memory_sink(
             spark.conf.set(
                 "spark.sql.shuffle.partitions", str(int(shuffle_partitions))
             )
+        q = None
         try:
             q = (
                 stream_df.writeStream.outputMode(output_mode)
@@ -338,11 +333,15 @@ def run_to_memory_sink(
                 .start()
             )
         finally:
-            # The partition count is captured into the query's own
-            # checkpoint at start; restore as soon as that has happened
-            # so the lock guards the narrowest possible window.
+            # start() has cloned the session, partition count included;
+            # restore now so the lock guards the narrowest window.
             if prev is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
+                try:
+                    spark.conf.set("spark.sql.shuffle.partitions", prev)
+                except BaseException:
+                    if q is not None:
+                        q.stop()
+                    raise
     try:
         q.processAllAvailable()
     finally:

@@ -12,7 +12,6 @@ from supplier_performance_data_pipeline_spark.operators.dedup import (
 from supplier_performance_data_pipeline_spark.operators.graph import (
     CC_ITERS,
     connected_components,
-    dedup_clusters,
 )
 from tests.conftest import SF_ORACLE
 
@@ -42,42 +41,35 @@ def test_long_scrambled_chain_within_iters(spark):
     assert labels == {0}
 
 
-def test_cluster_rollup(spark):
-    out = dedup_clusters(_pairs(spark, [(1, 2), (2, 3), (7, 8)]))
-    got = {r["component"]: r["n_members"] for r in out.collect()}
-    assert got == {1: 3, 7: 2}
-
-
 def test_fixed_point_on_real_pairs(spark):
-    """At the driver's oracle scale the LSH pair graph must reach a
-    fixed point by CC_ITERS: one extra round changes nothing."""
+    """At the driver's oracle scale the LSH pair graph must reach its
+    fixed point within the CC_ITERS round pairs the oracle unrolls:
+    the confirming round comes at most one pair later."""
     docs = spark.read.parquet(os.path.join(SF_ORACLE, "documents.parquet"))
     pairs = near_dup_pairs(docs).filter(
         F.col("n_matching_components") >= 4
     ).select("doc_a", "doc_b").persist()
-    a = connected_components(pairs, iters=CC_ITERS)
-    b = connected_components(pairs, iters=CC_ITERS + 1)
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    stats: dict = {}
+    connected_components(pairs, stats_out=stats)
+    assert stats["converged"] is True
+    assert stats["rounds"] <= CC_ITERS + 1
     pairs.unpersist()
 
 
 def test_until_converged_extends_past_iters(spark):
-    """The convergence guard: a scrambled long path that one
-    large/small-star round pair cannot collapse is still fully solved
-    with until_converged=True starting from the same iters=1 budget,
-    while the fixed-round unroll (until_converged=False) returns the
-    not-yet-converged labeling — the silent-at-scale case the guard
-    exists to prevent."""
+    """The convergence loop: a scrambled long path that one
+    large/small-star round pair cannot collapse is still fully solved,
+    because the loop keeps iterating to the fixed point."""
     rng_order = [
         29, 4, 41, 16, 33, 8, 45, 0, 21, 37, 12, 25, 2, 46, 18, 40,
         6, 31, 13, 44, 9, 27, 1, 35, 20, 47, 11, 38, 5, 23, 15, 42,
         7, 30, 3, 36, 19, 43, 10, 26, 14, 39, 22, 34, 17, 28, 24, 32,
     ]
     pairs = _pairs(spark, list(zip(rng_order, rng_order[1:])))
-    partial = connected_components(pairs, iters=1, until_converged=False)
-    assert {r["component"] for r in partial.collect()} != {0}
-    full = connected_components(pairs, iters=1, until_converged=True)
+    stats: dict = {}
+    full = connected_components(pairs, stats_out=stats)
     assert {r["component"] for r in full.collect()} == {0}
+    assert stats["converged"] is True and stats["rounds"] > 2
 
 
 def test_stats_out_telemetry(spark):
@@ -166,46 +158,6 @@ def test_bfs_distances_on_a_path_graph(spark):
     assert full[5] == 4
 
 
-def test_graph_ops_non_broadcast_path_identical(spark):
-    """broadcast_nodes=False must change only the join STRATEGY, never
-    results: past broadcast scale the node tables shuffle under AQE
-    instead of OOMing the driver with a forced broadcast relation.
-    Results are rounded/deterministic, so equality is exact."""
-    from supplier_performance_data_pipeline_spark.operators.graph import (
-        bfs_distances,
-        pagerank,
-    )
-
-    und = [(1, 2), (1, 3), (1, 4), (4, 5), (5, 6), (3, 6)]
-    edges = spark.createDataFrame(
-        und + [(v, u) for u, v in und], "u long, v long"
-    )
-    pr_bc = {r.s: r.r for r in pagerank(edges).collect()}
-    pr_plain = {
-        r.s: r.r for r in pagerank(edges, broadcast_nodes=False).collect()
-    }
-    assert pr_plain == pr_bc
-
-    bfs_bc = {r.node: r.dist for r in bfs_distances(edges, 1).collect()}
-    bfs_plain = {
-        r.node: r.dist
-        for r in bfs_distances(edges, 1, broadcast_nodes=False).collect()
-    }
-    assert bfs_plain == bfs_bc
-
-    # The knob reaches the join: with the hint absent, _nodes_side
-    # returns the frame untouched (no broadcast wrapper in lineage).
-    # (The returned plans are localCheckpointed per round, so the
-    # strategy difference is only observable mid-iteration; results
-    # equality above is the substantive contract.)
-    from supplier_performance_data_pipeline_spark.operators.graph import (
-        _nodes_side,
-    )
-
-    assert _nodes_side(edges, False) is edges
-    assert _nodes_side(edges, True) is not edges
-
-
 def test_triangle_count_matches_brute_force(spark):
     """Degree-oriented wedge counting vs itertools brute force on
     seeded pseudo-random graphs (including a hub star that punishes a
@@ -248,21 +200,3 @@ def test_triangle_count_matches_brute_force(spark):
         assert row["n_triangles"] == expected, (edges, row, expected)
         assert row["n_edges"] == len(edges)
         assert row["n_nodes"] == len(adj)
-
-
-def test_triangle_count_non_broadcast_identical(spark):
-    """broadcast_nodes=False (the past-broadcast-scale path) changes
-    join strategy only — counts identical on K5."""
-    from itertools import combinations
-
-    from supplier_performance_data_pipeline_spark.operators.graph import (
-        triangle_count,
-    )
-
-    df = spark.createDataFrame(
-        list(combinations(range(5), 2)), "x long, y long"
-    )
-    a = triangle_count(df).collect()[0]
-    b = triangle_count(df, broadcast_nodes=False).collect()[0]
-    assert a == b
-    assert a["n_triangles"] == 10

@@ -408,28 +408,3 @@ def test_incremental_components_untouched_pass_through(spark):
     assert got == full
     assert stats["contracted_edges"] == 1
     assert stats["contracted_verts"] == 2
-
-
-def test_incremental_components_unmaterialized_old_matches(spark):
-    """materialize_old=False (the stored-table production path: the
-    label table is a cheap pruned re-scan, not worth copying onto
-    executor storage) must produce identical labels."""
-    from supplier_performance_data_pipeline_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
-
-    old_edges = [(1, 2), (2, 3), (10, 11)]
-    new_edges = [(3, 50), (11, 99)]
-    old = connected_components(
-        spark.createDataFrame(old_edges, "doc_a long, doc_b long")
-    )
-    new = spark.createDataFrame(new_edges, "doc_a long, doc_b long")
-    got = {
-        r["id"]: r["component"]
-        for r in incremental_components(
-            old, new, materialize_old=False
-        ).collect()
-    }
-    want = _full_cc(spark, old_edges + new_edges)
-    assert got == want

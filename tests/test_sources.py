@@ -152,6 +152,66 @@ def test_tune_session_respects_explicit_shuffle_partitions(spark):
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
+def test_query_spec_build_tunes_a_stock_session(spark):
+    """QuerySpec.build tunes the session it is handed once, before the
+    builder runs: a session on Spark's stock values (200 shuffle
+    partitions, a non-UTC zone, AQE off) comes out on the engine's."""
+    from supplier_performance_data_pipeline_spark.plans.registry import (
+        load_all,
+    )
+    from supplier_performance_data_pipeline_spark.session import (
+        DEFAULT_SHUFFLE_PARTITIONS,
+        ENGINE_CONF,
+    )
+    from tests.conftest import SF_SMOKE
+
+    stock = {
+        "spark.sql.shuffle.partitions": "200",
+        "spark.sql.session.timeZone": "America/Los_Angeles",
+        "spark.sql.adaptive.enabled": "false",
+    }
+    before = {k: spark.conf.get(k) for k in [*stock, *ENGINE_CONF]}
+    try:
+        for k, v in stock.items():
+            spark.conf.set(k, v)
+        load_all()["preview_suppliers"].build(spark, SF_SMOKE)
+        for k, v in ENGINE_CONF.items():
+            assert spark.conf.get(k) == v, k
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+            DEFAULT_SHUFFLE_PARTITIONS
+        )
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+def test_query_modules_leave_tuning_and_table_reads_to_shared_code():
+    """Session tuning happens once, in QuerySpec.build, and testdata
+    tables are read through the one ``_t`` in plans/tpch_domain.py: no
+    plans/queries_*.py module calls tune_session or defines its own
+    ``_t``."""
+    import ast
+    import glob
+    import os
+
+    from supplier_performance_data_pipeline_spark import plans
+
+    paths = glob.glob(os.path.join(os.path.dirname(plans.__file__), "queries_*.py"))
+    assert paths
+    offenders = []
+    for path in paths:
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "tune_session"
+            ) or (isinstance(node, ast.FunctionDef) and node.name == "_t"):
+                offenders.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not offenders, offenders
+
+
 def test_zorder_layout_clusters_both_dimensions(spark, tmp_path):
     """The 2-d data-skipping precondition: under the z-order layout
     EVERY file's footer stats are tight on BOTH keys (each file covers

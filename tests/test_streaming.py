@@ -4,6 +4,7 @@ events parquet must equal the batch operator's result."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from supplier_performance_data_pipeline_spark.operators.windows import hourly_rollup
 from supplier_performance_data_pipeline_spark.streaming.events import (
@@ -128,3 +129,30 @@ def test_stream_static_dim_join_enriches_per_user_rollup(spark):
         .toPandas()
     )
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_run_to_memory_sink_stops_query_when_conf_restore_fails(
+    spark, monkeypatch
+):
+    """If restoring the session's shuffle partitions raises after
+    start(), the error propagates and the started query is stopped."""
+    conf = spark.conf
+    real_set = conf.set
+    calls = []
+
+    def flaky_set(key, value):
+        calls.append(key)
+        if key == "spark.sql.shuffle.partitions" and len(calls) > 1:
+            raise RuntimeError("restore failed")
+        return real_set(key, value)
+
+    before = conf.get("spark.sql.shuffle.partitions")
+    stream = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    monkeypatch.setattr(conf, "set", flaky_set)
+    with pytest.raises(RuntimeError, match="restore failed"):
+        run_to_memory_sink(
+            stream, "restore_fails_out", "append", shuffle_partitions=3
+        )
+    monkeypatch.undo()
+    real_set("spark.sql.shuffle.partitions", before)
+    assert spark.streams.active == []

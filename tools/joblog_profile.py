@@ -26,6 +26,53 @@ from supplier_performance_data_pipeline_spark.plans.registry import load_all
 from supplier_performance_data_pipeline_spark.session import get_spark
 
 
+def parse_event_log(lines) -> tuple[dict[int, dict], dict[int, dict]]:
+    """Jobs and stages from the JSON lines of a Spark event log.
+
+    A stage whose completion event lacks a submission or completion
+    time never ran (its shuffle output was reused); its ``ms`` is
+    ``None`` so ``skipped_stages`` counts it instead of reporting an
+    epoch-scale duration."""
+    jobs: dict[int, dict] = {}
+    stages: dict[int, dict] = {}
+    for line in lines:
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        e = ev.get("Event")
+        if e == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            jobs[ev["Job ID"]] = {
+                "t0": ev["Submission Time"],
+                "group": props.get("spark.jobGroup.id", ""),
+                "desc": (props.get("spark.job.description", "")
+                         or props.get("callSite.short", ""))[:110],
+                "n_stages": len(ev.get("Stage Infos", [])),
+                "stage_ids": [s["Stage ID"]
+                              for s in ev.get("Stage Infos", [])],
+            }
+        elif e == "SparkListenerJobEnd":
+            if ev["Job ID"] in jobs:
+                jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
+        elif e == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            t0, t1 = si.get("Submission Time"), si.get("Completion Time")
+            stages[si["Stage ID"]] = {
+                "name": si.get("Stage Name", "")[:80],
+                "n_tasks": si.get("Number of Tasks", 0),
+                "ms": None if t0 is None or t1 is None else t1 - t0,
+            }
+    return jobs, stages
+
+
+def skipped_stages(job: dict, stages: dict[int, dict]) -> int:
+    """Stages the job lists that never ran."""
+    return sum(
+        stages.get(s, {}).get("ms") is None for s in job["stage_ids"]
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -60,41 +107,13 @@ def main() -> None:
             spark.catalog.clearCache()
     spark.stop()
 
-    # Parse the event log.
     logs = glob.glob(os.path.join(log_dir, "*"))
     assert logs, f"no event log in {log_dir}"
-    jobs: dict[int, dict] = {}
-    stages: dict[int, dict] = {}
+    lines: list[str] = []
     for path in logs:
         with open(path) as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                e = ev.get("Event")
-                if e == "SparkListenerJobStart":
-                    props = ev.get("Properties") or {}
-                    jobs[ev["Job ID"]] = {
-                        "t0": ev["Submission Time"],
-                        "group": props.get("spark.jobGroup.id", ""),
-                        "desc": (props.get("spark.job.description", "")
-                                 or props.get("callSite.short", ""))[:110],
-                        "n_stages": len(ev.get("Stage Infos", [])),
-                        "stage_ids": [s["Stage ID"]
-                                      for s in ev.get("Stage Infos", [])],
-                    }
-                elif e == "SparkListenerJobEnd":
-                    if ev["Job ID"] in jobs:
-                        jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
-                elif e == "SparkListenerStageCompleted":
-                    si = ev["Stage Info"]
-                    stages[si["Stage ID"]] = {
-                        "name": si.get("Stage Name", "")[:80],
-                        "n_tasks": si.get("Number of Tasks", 0),
-                        "ms": (si.get("Completion Time", 0)
-                               - si.get("Submission Time", 0)),
-                    }
+            lines += f.readlines()
+    jobs, stages = parse_event_log(lines)
 
     by_group: dict[str, list[tuple[int, dict]]] = {}
     for jid, j in sorted(jobs.items()):
@@ -114,10 +133,11 @@ def main() -> None:
             prev_end = j.get("t1", j["t0"])
             stg = [
                 f"{stages[s]['n_tasks']}t/{stages[s]['ms']}ms"
-                for s in j["stage_ids"] if s in stages
+                for s in j["stage_ids"] if stages.get(s, {}).get("ms") is not None
             ]
             print(f"  job {jid:4d} {dur:7.3f}s gap {gap:6.3f}s "
                   f"stages[{len(j['stage_ids'])}]={','.join(stg[:8])} "
+                  f"skipped {skipped_stages(j, stages)} "
                   f"| {j['desc'][:80]}")
 
 
